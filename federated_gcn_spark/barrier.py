@@ -54,6 +54,16 @@ def _rewrap_public(ck: DataFrame, spark) -> DataFrame:
 _REWRAP_STRATEGIES = (_rewrap_internal, _rewrap_public)
 
 
+def _rewrap(ck: DataFrame) -> DataFrame:
+    """Re-wrap a checkpointed frame with the first strategy that works."""
+    for rewrap in _REWRAP_STRATEGIES:
+        try:
+            return rewrap(ck, ck.sparkSession)
+        except Exception:
+            continue
+    return ck  # correct but re-grows stats
+
+
 def iteration_barrier(df: DataFrame) -> DataFrame:
     """Materialize ``df`` and cut BOTH lineage and carried statistics.
 
@@ -61,14 +71,7 @@ def iteration_barrier(df: DataFrame) -> DataFrame:
     the next iteration of a driver-side loop. For one-shot staging of a
     reused intermediate, plain ``localCheckpoint`` is fine.
     """
-    ck = df.localCheckpoint(eager=True)
-    spark = ck.sparkSession
-    for rewrap in _REWRAP_STRATEGIES:
-        try:
-            return rewrap(ck, spark)
-        except Exception:
-            continue
-    return ck  # correct but re-grows stats
+    return _rewrap(df.localCheckpoint(eager=True))
 
 
 def agg_probed_barrier(df: DataFrame, *agg_cols):
@@ -83,15 +86,7 @@ def agg_probed_barrier(df: DataFrame, *agg_cols):
 
     Returns ``(frame, Row)`` with the aggregate values.
     """
-    ck = df.localCheckpoint(eager=False)
-    spark = ck.sparkSession
-    out = ck  # correct but re-grows stats (rewrap-failure fallback)
-    for rewrap in _REWRAP_STRATEGIES:
-        try:
-            out = rewrap(ck, spark)
-            break
-        except Exception:
-            continue
+    out = lazy_barrier(df)
     return out, out.agg(*agg_cols).collect()[0]
 
 
@@ -115,11 +110,4 @@ def lazy_barrier(df: DataFrame) -> DataFrame:
     still compute each round once.  Collapses a loop's N barrier jobs
     into the consumer's single job cascade.
     """
-    ck = df.localCheckpoint(eager=False)
-    spark = ck.sparkSession
-    for rewrap in _REWRAP_STRATEGIES:
-        try:
-            return rewrap(ck, spark)
-        except Exception:
-            continue
-    return ck  # correct but re-grows stats
+    return _rewrap(df.localCheckpoint(eager=False))

@@ -33,10 +33,12 @@ from pyspark.sql import functions as F
 from federated_gcn_spark.barrier import agg_probed_barrier
 from federated_gcn_spark.graph.graph import DST, ID, SRC, Graph
 
+
 def _snapshot_probe():
     """Order-insensitive (n, bit_xor-hash) edge-set fingerprint, as an
     aggregate probe that rides each round's barrier materialization
     job (built lazily: Columns need an active session)."""
+    # bit_xor: order-insensitive and overflow-free (ANSI-safe, unlike sum)
     return (
         F.count(F.lit(1)).alias("n"),
         F.coalesce(F.expr("bit_xor(xxhash64(u, v))"), F.lit(0)).alias("h"),
@@ -45,11 +47,7 @@ def _snapshot_probe():
 
 def _edge_snapshot(e: DataFrame) -> tuple[int, int]:
     """Order-insensitive fingerprint of an (u, v) edge set: one aggregate."""
-    # bit_xor: order-insensitive and overflow-free (ANSI-safe, unlike sum)
-    row = e.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.expr("bit_xor(xxhash64(u, v))"), F.lit(0)).alias("h"),
-    ).first()
+    row = e.agg(*_snapshot_probe()).first()
     return int(row["n"]), int(row["h"])
 
 

@@ -66,32 +66,52 @@ def _sample_negatives(rng, target: int, n: int, pos: set) -> tuple[list, list]:
     return neg_u, neg_v
 
 
-def _canonical_group(
-    nodes_pdf: pd.DataFrame, edges_pdf: pd.DataFrame
-) -> tuple[pd.DataFrame, pd.DataFrame]:
-    """Sort a cogroup's inputs so kernels see a canonical row order.
+def _decode_group(nodes_pdf: pd.DataFrame, edges_pdf: pd.DataFrame):
+    """Decode one cogroup (an FL client) into kernel inputs.
 
-    applyInPandas delivers a group's rows in whatever order the shuffle
-    read produced them — a function of the upstream plan shape and
-    runtime scheduling, NOT of the data. Everything downstream of the
-    id→index map (feature-matrix layout, gradient summation order, the
-    rng-draw↔row correspondence in negative sampling) depends on that
-    order, so without a canonical sort "bit-identical" only holds while
-    the two plans being compared happen to shuffle identically — wave
-    scheduling, checkpoint/resume, or an AQE re-plan can silently break
-    it. Sorting here (groups are small by design — one FL client) makes
-    the kernels layout-independent, the same doctrine as the xxhash64
-    pseudo-rand in graph/sampling.py.
+    Returns ``(ids, x, (src, dst), (msg_src, msg_dst))``: node ids in
+    canonical order, the float64 feature matrix, and the training and
+    message-passing edges as row indices into ``ids``. Edges with an
+    endpoint outside the group's node set are dropped (the J1 integrity
+    join, local edition). Without a ``role`` column both edge sets are
+    the group's edges; with one, role='train' rows are the training
+    edges and role='msg' rows the message-passing graph.
+
+    The inputs are sorted first. applyInPandas delivers a group's rows in
+    whatever order the shuffle read produced them — a function of the
+    upstream plan shape and runtime scheduling, NOT of the data.
+    Everything downstream of the id→index map (feature-matrix layout,
+    gradient summation order, the rng-draw↔row correspondence in negative
+    sampling) depends on that order, so without a canonical sort
+    "bit-identical" only holds while the two plans being compared happen
+    to shuffle identically — wave scheduling, checkpoint/resume, or an
+    AQE re-plan can silently break it. Sorting here (groups are small by
+    design — one FL client) makes the kernels layout-independent, the
+    same doctrine as the xxhash64 pseudo-rand in graph/sampling.py.
     """
-    nodes_pdf = nodes_pdf.sort_values(
-        "id", kind="mergesort", ignore_index=True
-    )
+    nodes_pdf = nodes_pdf.sort_values("id", kind="mergesort", ignore_index=True)
     ecols = [c for c in ("role", "src", "dst") if c in edges_pdf.columns]
     if ecols:
-        edges_pdf = edges_pdf.sort_values(
-            ecols, kind="mergesort", ignore_index=True
+        edges_pdf = edges_pdf.sort_values(ecols, kind="mergesort", ignore_index=True)
+    ids = nodes_pdf["id"].to_numpy()
+    idx = {v: i for i, v in enumerate(ids)}
+    x = np.stack(nodes_pdf["features"].to_numpy()).astype("float64")
+
+    def local(e: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
+        e = e[e["src"].isin(idx) & e["dst"].isin(idx)]
+        return (
+            e["src"].map(idx).to_numpy(dtype="int64"),
+            e["dst"].map(idx).to_numpy(dtype="int64"),
         )
-    return nodes_pdf, edges_pdf
+
+    if "role" not in edges_pdf.columns:
+        both = local(edges_pdf)
+        return ids, x, both, both
+    return (
+        ids, x,
+        local(edges_pdf[edges_pdf["role"] == "train"]),
+        local(edges_pdf[edges_pdf["role"] == "msg"]),
+    )
 
 
 def _make_train_fn(weights_bc, layer_sizes, lr, epochs, seed, feature_dim,
@@ -114,23 +134,7 @@ def _make_train_fn(weights_bc, layer_sizes, lr, epochs, seed, feature_dim,
 
     def train(key, nodes_pdf: pd.DataFrame, edges_pdf: pd.DataFrame) -> pd.DataFrame:
         (partition_id,) = key
-        nodes_pdf, edges_pdf = _canonical_group(nodes_pdf, edges_pdf)
-        ids = nodes_pdf["id"].to_numpy()
-        idx = {v: i for i, v in enumerate(ids)}
-        if "role" in edges_pdf.columns:
-            train_pdf = edges_pdf[edges_pdf["role"] == "train"]
-            msg_pdf = edges_pdf[edges_pdf["role"] == "msg"]
-        else:
-            train_pdf = msg_pdf = edges_pdf
-        x = np.stack(nodes_pdf["features"].to_numpy()).astype("float64")
-        # drop edges whose endpoints are outside this partition's node set
-        # (the J1 integrity join, local edition)
-        e = train_pdf[train_pdf["src"].isin(idx) & train_pdf["dst"].isin(idx)]
-        src = e["src"].map(idx).to_numpy(dtype="int64")
-        dst = e["dst"].map(idx).to_numpy(dtype="int64")
-        me = msg_pdf[msg_pdf["src"].isin(idx) & msg_pdf["dst"].isin(idx)]
-        msg_src = me["src"].map(idx).to_numpy(dtype="int64")
-        msg_dst = me["dst"].map(idx).to_numpy(dtype="int64")
+        ids, x, (src, dst), (msg_src, msg_dst) = _decode_group(nodes_pdf, edges_pdf)
 
         model = GraphSAGELinkModel(feature_dim, layer_sizes, lr=lr,
                                    seed=seed + int(partition_id),
@@ -506,13 +510,7 @@ def distributed_nograd(
 
     def train_and_embed(key, nodes_pdf: pd.DataFrame, edges_pdf: pd.DataFrame):
         (partition_id,) = key
-        nodes_pdf, edges_pdf = _canonical_group(nodes_pdf, edges_pdf)
-        ids = nodes_pdf["id"].to_numpy()
-        idx = {v: i for i, v in enumerate(ids)}
-        x = np.stack(nodes_pdf["features"].to_numpy()).astype("float64")
-        e = edges_pdf[edges_pdf["src"].isin(idx) & edges_pdf["dst"].isin(idx)]
-        src = e["src"].map(idx).to_numpy(dtype="int64")
-        dst = e["dst"].map(idx).to_numpy(dtype="int64")
+        ids, x, (src, dst), _ = _decode_group(nodes_pdf, edges_pdf)
         from federated_gcn_spark.ml.kernels import sample_walk_pairs
 
         model = GraphSAGELinkModel(feature_dim, layer_sizes, lr=lr,
@@ -566,13 +564,7 @@ def gen_embeddings(
 
     def embed(key, nodes_pdf: pd.DataFrame, edges_pdf: pd.DataFrame) -> pd.DataFrame:
         (partition_id,) = key
-        nodes_pdf, edges_pdf = _canonical_group(nodes_pdf, edges_pdf)
-        ids = nodes_pdf["id"].to_numpy()
-        idx = {v: i for i, v in enumerate(ids)}
-        x = np.stack(nodes_pdf["features"].to_numpy()).astype("float64")
-        e = edges_pdf[edges_pdf["src"].isin(idx) & edges_pdf["dst"].isin(idx)]
-        src = e["src"].map(idx).to_numpy(dtype="int64")
-        dst = e["dst"].map(idx).to_numpy(dtype="int64")
+        ids, x, (src, dst), _ = _decode_group(nodes_pdf, edges_pdf)
         model = GraphSAGELinkModel(feature_dim, layer_sizes, seed=seed)
         model.set_weights(weights_bc.value)
         h = model.embed(x, src, dst)

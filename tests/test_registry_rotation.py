@@ -1,101 +1,12 @@
-"""Invariants of the driver-facing query registry rotation.
+"""Invariants of the driver-facing query registry (``plans.QUERIES`` /
+``plans.ORACLE``). Pure-Python checks — no Spark session."""
 
-The driver records official correctness rows for only the FIRST 50
-entries of ``queries()`` per round (plans/__init__.py), so ordering
-bugs silently waste coverage slots: a typo in ``_DRIVER_RECORDED``
-re-spends a slot on an already-recorded query, and a fresh-block query
-without an ``oracle_sql`` entry burns a slot on a weaker rows-only row.
-Pure-Python checks — no Spark session.
-"""
-
-from federated_gcn_spark.plans import (
-    ORACLE,
-    QUERIES,
-    _DRIVER_RECORDED,
-    _FRESH_FIRST,
-    _PROMOTED,
-)
+from federated_gcn_spark.plans import ORACLE, QUERIES
 from federated_gcn_spark.plans.queries import QUERIES as _RAW
 
 
-def test_driver_recorded_names_are_all_declared():
-    # a typo'd name here would keep a recorded query in the fresh block
-    unknown = _DRIVER_RECORDED - set(_RAW)
-    assert not unknown, f"_DRIVER_RECORDED names not in registry: {unknown}"
-
-
-def test_promoted_names_are_declared_and_oracle_paired():
-    for n in _PROMOTED:
-        assert n in _RAW, f"promoted {n!r} is not a declared query"
-        assert n in ORACLE, f"promoted {n!r} has no oracle twin"
-
-
 def test_rotation_preserves_the_full_registry():
-    assert set(QUERIES) == set(_RAW)
+    # the package exports every registered query in registration order,
+    # and every oracle twin belongs to a declared query
+    assert list(QUERIES) == list(_RAW)
     assert set(ORACLE) <= set(QUERIES)
-
-
-def _expected_head():
-    """Recompute the rotation head with the SAME filters ``_rotated``
-    applies (round-8 advice: a naive ``len(_PROMOTED)+len(_FRESH_FIRST)``
-    slice overcounts once promoted/fresh-first names drop out of the
-    registry or get recorded, silently weakening the assertions)."""
-    promoted = [n for n in _PROMOTED if n in _RAW]
-    first = [
-        n for n in _FRESH_FIRST
-        if n in _RAW and n not in _DRIVER_RECORDED and n not in promoted
-    ]
-    return promoted, first
-
-
-def test_first_50_slots_spend_every_fresh_name_and_are_oracle_paired():
-    # Every promoted / never-recorded name must land inside the driver's
-    # 50-slot window while any remain; recorded fillers may pad the tail
-    # only once the fresh pool is smaller than the window (round 9: 36
-    # fresh+promoted, 14 fillers).
-    names = list(QUERIES)
-    promoted, first = _expected_head()
-    fresh = [
-        n for n in names
-        if n in promoted or n in first or n not in _DRIVER_RECORDED
-    ]
-    window = names[: min(50, len(names))]
-    for n in fresh[:50]:
-        assert n in window, (
-            f"slot wasted: never-recorded {n!r} fell outside the 50-slot "
-            "window while a recorded filler occupied a slot"
-        )
-    for n in window:
-        if n not in fresh:
-            assert len(fresh) < 50, (
-                f"slot wasted: {n!r} already has an official row and is "
-                "not promoted, yet fresh names remain outside the window"
-            )
-        assert n in ORACLE, (
-            f"slot weakened: {n!r} would record rows-only (no oracle)"
-        )
-
-
-def test_fresh_first_names_lead_the_window():
-    # head length computed with _rotated's own filters (round-8 advice)
-    names = list(QUERIES)
-    promoted, first = _expected_head()
-    head = names[: len(promoted) + len(first)]
-    assert head == promoted + first
-    for n in _FRESH_FIRST:
-        assert n in _RAW, f"_FRESH_FIRST {n!r} is not a declared query"
-
-
-def test_no_fresh_query_sorts_after_a_recorded_one():
-    names = list(QUERIES)
-    seen_recorded = False
-    for n in names:
-        if n in _PROMOTED:
-            continue
-        if n in _DRIVER_RECORDED:
-            seen_recorded = True
-        else:
-            assert not seen_recorded, (
-                f"never-recorded {n!r} sorts after a recorded query — it "
-                "can never reach the driver's 50-slot window"
-            )

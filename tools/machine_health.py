@@ -6,9 +6,9 @@ full-sidecar re-run still read +45% vs the round-7 artifact with ZERO
 plan deltas on the moved queries; this probe measured **18.5% CPU steal
 under full 32-core load** at that moment — the host was overcommitted,
 and steal lands super-linearly on Spark stage times (a stage ends at its
-slowest task, so the straggler eats the steal burst).  Every bench
-artifact now embeds this probe's output so round-over-round diffs can
-separate "the code got slower" from "the host got busier".
+slowest task, so the straggler eats the steal burst).  The scaling
+bench (``tools/bench_scale.py``) embeds this probe's output so its
+artifacts can separate "the code got slower" from "the host got busier".
 
     python tools/machine_health.py          # one JSON line
 """
